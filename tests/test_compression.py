@@ -1,81 +1,80 @@
-"""From-scratch snappy / LZ4 / xxHash32 codecs (sources/compression.py).
+"""Kafka / binlog codec dispatch (sources/compression.py).
 
-Vectors come from the public format specs: xxHash32 known answers from
-Cyan4973/xxHash, the snappy tag layout from google/snappy
-format_description.txt, the LZ4 block layout from lz4_Block_format.md.
+The hand vectors follow the public layouts (google/snappy
+format_description.txt, lz4_Block_format.md); the segment tests feed
+``parse_segment_bytes`` frames in the shapes real producers write (linked
+LZ4 blocks, zstd frames without a content size).
 """
 
 import random
 import struct
 
+import pyarrow as pa
 import pytest
 
 from ape_dts_spark.sources import compression as C
 from ape_dts_spark.sources import kafka_segment as ks
 
 
-def test_xxhash32_known_answers():
-    # published test vectors (xxHash reference implementation, seed 0)
-    assert C.xxhash32(b"") == 0x02CC5D05
-    assert C.xxhash32(b"a") == 0x550D7456
-    assert C.xxhash32(b"abc") == 0x32D153FF
-    assert C.xxhash32(b"Hello World") == 0xB1FD16EE
-    # seed parameter participates
-    assert C.xxhash32(b"abc", seed=1) != C.xxhash32(b"abc")
-    # >=16-byte path (vectorized lanes)
-    assert C.xxhash32(b"0123456789abcdef" * 4) == C.xxhash32(b"0123456789abcdef" * 4)
+def _snappy(block: bytes) -> bytes:
+    return C.decompress("snappy", block)
 
 
 def test_snappy_hand_vector_literal_plus_copy1():
     # varint(12) | literal len3 "abc" | copy1 len=9 off=3 (overlapping copy)
-    assert C.snappy_decompress(b"\x0c\x08abc\x15\x03") == b"abcabcabcabc"
+    assert _snappy(b"\x0c\x08abc\x15\x03") == b"abcabcabcabc"
 
 
 def test_snappy_copy2_and_copy4_decode():
     # literal "abcd", then copy2 (tag&3==2) len=4 off=4, then copy4 len=4 off=4
     blob = b"\x0c" + b"\x0cabcd" + bytes([((4 - 1) << 2) | 2]) + struct.pack("<H", 4)
     blob += bytes([((4 - 1) << 2) | 3]) + struct.pack("<I", 4)
-    assert C.snappy_decompress(blob) == b"abcdabcdabcd"
+    assert _snappy(blob) == b"abcdabcdabcd"
 
 
 def test_snappy_long_literal_length_bytes():
     rng = random.Random(1)
     data = bytes(rng.randrange(256) for _ in range(100))
     # 100 > 60: literal length must use the 1-extra-byte form
-    comp = C.snappy_compress(data)
-    assert C.snappy_decompress(comp) == data
+    comp = C.compress("snappy", data)
+    assert C.decompress("snappy", comp) == data
 
 
 def test_snappy_length_mismatch_detected():
-    with pytest.raises(ValueError, match="length mismatch"):
-        C.snappy_decompress(b"\x05\x08abc")  # preamble says 5, literal is 3
+    with pytest.raises(ValueError, match="Corrupt snappy"):
+        _snappy(b"\x05\x08abc")  # preamble says 5, literal is 3
 
 
 def test_snappy_bad_offset_detected():
-    with pytest.raises(ValueError, match="offset"):
-        C.snappy_decompress(b"\x08\x01\x09")  # copy1 before any output
+    with pytest.raises(ValueError, match="Corrupt snappy"):
+        _snappy(b"\x08\x01\x09")  # copy1 before any output
+
+
+def test_snappy_oversize_preamble_rejected():
+    # a 3-byte block whose preamble claims 2**21-1 decoded bytes: refused
+    # before the library allocates that buffer
+    with pytest.raises(ValueError, match="exceeds 32x"):
+        _snappy(b"\xff\xff\x7f")
+
+
+def _lz4_frame(block: bytes) -> bytes:
+    """One compressed LZ4 block in a v1 frame: FLG 0x60 (independent
+    blocks), BD 0x40 (64 KB), header checksum byte 0x82 = xxh32(FLG, BD)
+    >> 8 & 0xFF, then the end mark."""
+    return b"\x04\x22\x4d\x18\x60\x40\x82" + struct.pack("<I", len(block)) + block + bytes(4)
 
 
 def test_lz4_block_hand_vector():
     # token 0x44: 4 literals "abcd" + match len 8 @ off 4; final literals
     blob = b"\x44abcd\x04\x00" + b"\x50XYZWV"
-    assert C.lz4_block_decompress(blob) == b"abcdabcdabcdXYZWV"
+    assert C.decompress("lz4", _lz4_frame(blob)) == b"abcdabcdabcdXYZWV"
 
 
 def test_lz4_block_rle_overlap():
     # off=1 match replicates the previous byte: classic LZ4 RLE idiom
     blob = b"\x1fa\x01\x00" + bytes([255, 0]) + b"\x50final"
-    out = C.lz4_block_decompress(blob)
+    out = C.decompress("lz4", _lz4_frame(blob))
     assert out == b"a" * (1 + 15 + 4 + 255) + b"final"
-
-
-def test_lz4_compress_respects_end_rules():
-    # highly compressible input: the last 5 bytes must still be literals
-    data = b"xyz" * 100
-    comp = C.lz4_block_compress(data)
-    assert C.lz4_block_decompress(comp) == data
-    # final sequence is literal-only: walk to the last token
-    assert comp[-6] == (5 << 4) or True  # structural check via full decode
 
 
 def test_roundtrips_random_and_repetitive():
@@ -85,44 +84,47 @@ def test_roundtrips_random_and_repetitive():
         data = bytes(rng.randrange(256) for _ in range(n))
         if rng.random() < 0.5 and n:
             data = (data[: max(1, n // 40)] * 50)[:n]
-        assert C.snappy_decompress(C.snappy_compress(data)) == data
-        assert C.lz4_block_decompress(C.lz4_block_compress(data)) == data
-        assert C.snappy_java_unframe(C.snappy_java_frame(data)) == data
-        assert C.lz4_frame_decompress(C.lz4_frame_compress(data)) == data
+        for codec in ("none", "gzip", "snappy", "lz4", "zstd"):
+            assert C.decompress(codec, C.compress(codec, data)) == data, codec
 
 
 def test_snappy_java_framing_shape():
     data = bytes(range(256)) * 300  # crosses the 32 KB block boundary
-    framed = C.snappy_java_frame(data)
+    framed = C.compress("snappy", data)
     assert framed.startswith(b"\x82SNAPPY\x00")
     assert struct.unpack_from(">ii", framed, 8) == (1, 1)
-    assert C.snappy_java_unframe(framed) == data
+    assert C.decompress("snappy", framed) == data
     # raw-block fallback (older clients): no magic -> bare block decode
-    assert C.snappy_java_unframe(C.snappy_compress(b"hello")) == b"hello"
-
-
-def test_lz4_frame_shape_and_checksums():
-    data = b"The quick brown fox jumps over the lazy dog. " * 200
-    framed = C.lz4_frame_compress(data)
-    assert struct.unpack_from("<I", framed, 0)[0] == 0x184D2204
-    flg, bd = framed[4], framed[5]
-    assert flg >> 6 == 1 and flg & 0x20  # version 01, block independence
-    assert framed[6] == (C.xxhash32(bytes([flg, bd])) >> 8) & 0xFF
-    assert C.lz4_frame_decompress(framed) == data
-    # header-checksum corruption is detected
-    bad = bytearray(framed)
-    bad[6] ^= 0xFF
-    with pytest.raises(ValueError, match="header checksum"):
-        C.lz4_frame_decompress(bytes(bad))
+    raw = pa.Codec("snappy").compress(b"hello", asbytes=True)
+    assert C.decompress("snappy", raw) == b"hello"
 
 
 def test_lz4_frame_incompressible_stores_raw():
     rng = random.Random(9)
     data = bytes(rng.randrange(256) for _ in range(5000))
-    framed = C.lz4_frame_compress(data)
-    (bsize,) = struct.unpack_from("<I", framed, 7)
+    framed = C.compress("lz4", data)
+    (bsize,) = struct.unpack_from("<I", framed, 7)  # 7-byte frame header
     assert bsize & 0x80000000  # stored-uncompressed flag
-    assert C.lz4_frame_decompress(framed) == data
+    assert C.decompress("lz4", framed) == data
+
+
+def test_unknown_codec_rejected():
+    with pytest.raises(ValueError, match="unsupported compression"):
+        C.compress("brotli", b"x")
+    with pytest.raises(ValueError, match="unsupported compression"):
+        C.decompress("brotli", b"x")
+
+
+def test_corrupt_frames_raise_valueerror():
+    data = b"The quick brown fox jumps over the lazy dog. " * 200
+    for codec in ("gzip", "lz4", "zstd"):
+        with pytest.raises(ValueError, match=f"corrupt {codec}"):
+            C.decompress(codec, C.compress(codec, data)[:-3])
+    # LZ4 frame header-checksum corruption is detected
+    bad = bytearray(C.compress("lz4", data))
+    bad[6] ^= 0xFF
+    with pytest.raises(ValueError, match="headerChecksum"):
+        C.decompress("lz4", bytes(bad))
 
 
 def test_kafka_batch_snappy_and_lz4():
@@ -139,8 +141,8 @@ def test_kafka_batch_snappy_and_lz4():
 
 
 def test_kafka_zstd_roundtrip():
-    # codec 4 is real since round 11: RFC 8878 decoder + in-repo frame
-    # writer (sources/zstd_codec.py); segment parse must round-trip it
+    # codec 4: zstd frames decode through libzstd; segment parse must
+    # round-trip the writer's batches
     msgs = [(b"k%d" % i, b"value-%d" % i, None) for i in range(30)]
     data = ks.encode_batch(msgs, 0, 0, compression="zstd")
     rows = ks.parse_segment_bytes(data, topic="t")
@@ -148,9 +150,51 @@ def test_kafka_zstd_roundtrip():
 
 
 def test_lz4_frame_dictid_rejected_explicitly():
-    # r10 (ADVICE r9): the FLG DictID bit shifts the descriptor — reject it
-    # with a precise error instead of a misleading checksum mismatch
-    fr = bytearray(C.lz4_frame_compress(b"payload " * 40))
+    # the FLG DictID bit shifts the descriptor: the frame must be refused,
+    # not decoded against a dictionary nobody supplied
+    fr = bytearray(C.compress("lz4", b"payload " * 40))
     fr[4] |= 0x01
-    with pytest.raises(ValueError, match="dictionary frames unsupported"):
-        C.lz4_frame_decompress(bytes(fr))
+    with pytest.raises(ValueError, match="corrupt lz4"):
+        C.decompress("lz4", bytes(fr))
+
+
+def _streamed_batch(codec: str, msgs: list) -> tuple[bytes, bytes]:
+    """One record batch whose records block is a ``CompressedOutputStream``
+    frame: liblz4's linked blocks, or a zstd frame with no content size
+    (the zstd-jni producer shape)."""
+    plain = ks.encode_batch(msgs, 0, 1_700_000_000_000)
+    records = plain[61:]  # 61-byte v2 batch header, then the records block
+    sink = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(sink, codec) as out:
+        out.write(records)
+    frame = sink.getvalue().to_pybytes()
+    after_crc = bytearray(plain[21:61]) + frame
+    struct.pack_into(">h", after_crc, 0, {"lz4": 3, "zstd": 4}[codec])
+    body = struct.pack(">bI", 2, ks.crc32c(bytes(after_crc))) + after_crc
+    return struct.pack(">qii", 0, 4 + len(body), -1) + body, frame
+
+
+def _big_msgs() -> list:
+    """~400 KB of records: several 64 KB LZ4 blocks."""
+    rng = random.Random(7)
+    return [
+        (b"k%d" % i, bytes(rng.randrange(97, 123) for _ in range(400)) * 2, None)
+        for i in range(500)
+    ]
+
+
+def test_kafka_linked_block_lz4_segment():
+    msgs = _big_msgs()
+    seg, frame = _streamed_batch("lz4", msgs)
+    assert frame[4] & 0x20 == 0  # FLG block-independence bit clear: linked
+    assert frame[5] >> 4 == 4  # 64 KB maximum block size
+    rows = ks.parse_segment_bytes(seg, topic="t")
+    assert [(r["key"], r["value"]) for r in rows] == [(k, v) for k, v, _ in msgs]
+
+
+def test_kafka_zstd_segment_without_content_size():
+    msgs = _big_msgs()
+    seg, frame = _streamed_batch("zstd", msgs)
+    assert frame[4] >> 6 == 0 and not frame[4] & 0x20  # no Frame_Content_Size
+    rows = ks.parse_segment_bytes(seg, topic="t")
+    assert [(r["key"], r["value"]) for r in rows] == [(k, v) for k, v, _ in msgs]

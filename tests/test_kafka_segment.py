@@ -55,8 +55,8 @@ def test_crc_corruption_detected():
 
 
 def test_zstd_codec_roundtrip():
-    # codec 4 decodes for real since round 11 (from-scratch RFC 8878
-    # decoder, sources/zstd_codec.py)
+    # codec 4 decodes through pyarrow's bundled libzstd
+    # (sources/compression.py)
     msgs = _msgs(40)
     data = ks.encode_batch(msgs, 0, 0, compression="zstd")
     rows = ks.parse_segment_bytes(data, topic="t")
